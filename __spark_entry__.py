@@ -3320,7 +3320,7 @@ def _htmlx_oracles() -> dict[str, str]:
               SELECT doc_id, norm_url, warc_ts,
                      ROW_NUMBER() OVER (
                        PARTITION BY norm_url
-                       ORDER BY warc_ts DESC, doc_id DESC
+                       ORDER BY warc_ts DESC NULLS LAST, doc_id DESC
                      ) AS rn,
                      COUNT(*) OVER (PARTITION BY norm_url) AS n_crawls
               FROM n

@@ -373,7 +373,9 @@ def _eventlog_spark(cpus: int, name: str):
 def _task_histogram(evdir: str, job_group: str = None) -> dict:
     """max/p50 task duration of the heaviest stage, from TaskEnd events;
     with ``job_group``, only stages of jobs submitted under that
-    setJobGroup id are candidates. Removes the event-log dir afterwards."""
+    setJobGroup id are candidates, and a group that matched no stage
+    raises ValueError (never a silent widening to all stages). Removes
+    the event-log dir afterwards."""
     import glob
     import shutil
 
@@ -398,10 +400,15 @@ def _task_histogram(evdir: str, job_group: str = None) -> dict:
                 dur = info.get("Finish Time", 0) - info.get("Launch Time", 0)
                 stages.setdefault(ev.get("Stage ID"), []).append(dur)
     shutil.rmtree(evdir, ignore_errors=True)
-    if job_group and group_stages:
+    if job_group:
         # keep only stages submitted by the MEASURED jobs — otherwise the
         # heaviest-stage pick can land on a fixture-build/count stage and
         # the balance metric measures the wrong thing
+        if not group_stages:
+            raise ValueError(
+                f"job group {job_group!r} matched no stage in the event log; "
+                "refusing to fall back to all stages"
+            )
         stages = {sid: d for sid, d in stages.items() if sid in group_stages}
     heaviest = max(stages.values(), key=sum) if stages else [0]
     heaviest.sort()

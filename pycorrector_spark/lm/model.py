@@ -315,7 +315,11 @@ class CharNgramLM:
         return (csum[n:n + sent_len] - csum[:sent_len]) / float(n)
 
 
-def mad_outlier_indices(scores: np.ndarray, ratio: float = 0.6745, threshold: float = 2.0):
+MAD_RATIO = 0.6745
+MAD_THRESHOLD = 2.0
+
+
+def mad_outlier_indices(scores: np.ndarray, ratio: float = MAD_RATIO, threshold: float = MAD_THRESHOLD):
     """Median-absolute-deviation outlier test — reference detector.py:330-355.
 
     Flags i where ratio*|s_i - median|/MAD > threshold AND s_i < median.
@@ -329,6 +333,108 @@ def mad_outlier_indices(scores: np.ndarray, ratio: float = 0.6745, threshold: fl
     y = ratio * margin / mad
     idx = np.where((y > threshold) & (scores < median))[0]
     return [int(i) for i in idx]
+
+
+# Most cells (rows x padded row width) one 2-D array of
+# ``window_outliers_batch`` may hold. A fragment wider than this on its own
+# gets a chunk of one row: the same footprint as the scalar path.
+OUTLIER_CELL_CAP = 1 << 16
+# padded row width = fragment length + this: the 3-gram window row carries
+# 2 edge-pad cells per side plus the cumsum's leading zero
+_ROW_PAD = 5
+
+
+def outlier_chunks(lengths, cap: int):
+    """Slices cutting ascending ``lengths`` into consecutive chunks with
+    ``rows * (max length + _ROW_PAD) <= cap``; a row that alone exceeds
+    ``cap`` is a chunk by itself."""
+    chunks, start = [], 0
+    for j, n in enumerate(lengths):
+        if j > start and (j - start + 1) * (int(n) + _ROW_PAD) > cap:
+            chunks.append(slice(start, j))
+            start = j
+    if len(lengths):
+        chunks.append(slice(start, len(lengths)))
+    return chunks
+
+
+def _row_windows(wn: np.ndarray, n: int, off: np.ndarray, lens: np.ndarray, width: int):
+    """Row r, columns < lens[r]: ``CharNgramLM._pad_and_average`` of the
+    n-gram scores ``wn[off[r] : off[r] + lens[r] - n + 1]``. The edge-padded
+    rows are gathered by index and the cumsum runs along each row, so every
+    row is the 1-D computation bit for bit; columns past a row's length
+    hold junk."""
+    k = np.arange(width + 2 * (n - 1))
+    padded = wn[off[:, None] + np.clip(k - (n - 1), 0, (lens - n)[:, None])]
+    csum = np.zeros((len(lens), padded.shape[1] + 1))
+    np.cumsum(padded, axis=1, out=csum[:, 1:])
+    return (csum[:, n:n + width] - csum[:, :width]) / float(n)
+
+
+def _window_score_rows(w2: np.ndarray, w3, off: np.ndarray, lens: np.ndarray):
+    """(scores, valid): row r, columns < lens[r], is
+    ``CharNgramLM.window_avg_scores`` of the sentence at ``off[r]`` of the
+    joined text whose 2/3-gram scores are ``w2`` / ``w3``; +inf elsewhere."""
+    width = int(lens.max())
+    # np.average over the [2-gram(, 3-gram)] rows: (0.0 + a [+ b]) / count
+    scores = 0.0 + _row_windows(w2, 2, off, lens, width)
+    tri = lens >= 3
+    if tri.any():
+        scores[tri] = (scores[tri] + _row_windows(w3, 3, off[tri], lens[tri], width)) / 2.0
+    valid = np.arange(width)[None, :] < lens[:, None]
+    scores[~valid] = np.inf
+    return scores, valid
+
+
+def _row_medians(x: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """``np.median(x[r, :lens[r]])`` per row, bit for bit, for ``x`` padded
+    with +inf past each row's length: the middle element (odd length) or
+    the mean of the middle two (even), NaN for a row holding a NaN. The
+    sums start at +0.0 like np.mean's, so a -0.0 median comes out +0.0."""
+    s = np.sort(x, axis=1)
+    r = np.arange(len(lens))
+    lo, hi = s[r, (lens - 1) // 2], s[r, lens // 2]
+    med = np.where(lens % 2 == 1, 0.0 + lo, (0.0 + lo + hi) / 2.0)
+    med[np.isnan(x).any(axis=1)] = np.nan
+    return med
+
+
+def window_outliers_batch(lm: CharNgramLM, sentences):
+    """``mad_outlier_indices(lm.window_avg_scores(s))`` for every sentence
+    (``[]`` where the scores are None), bit for bit, as one pass.
+
+    The LM probes run once over all sentences joined together (window
+    n-grams crossing a sentence boundary are probed and never read). The
+    window averages and both medians then run row by row on padded 2-D
+    arrays, one per chunk of similar-length sentences, each under
+    ``OUTLIER_CELL_CAP`` cells (``outlier_chunks``)."""
+    out = [[] for _ in sentences]
+    lens_all = np.fromiter((len(s) for s in sentences), dtype=np.int64, count=len(sentences))
+    live = np.flatnonzero(lens_all >= 2)
+    if not len(live):
+        return out
+    lens = lens_all[live]
+    off = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    ids = lm.encode("".join(sentences[i] for i in live))
+    u = lm.uni(ids)
+    c2 = lm.cond2(ids[:-1], ids[1:])
+    w2 = u[:-1] + c2
+    w3 = u[:-2] + c2[:-1] + lm.cond3(ids[:-2], ids[1:-1], ids[2:]) if len(ids) >= 3 else None
+
+    order = np.argsort(lens, kind="stable")
+    for chunk in outlier_chunks(lens[order], OUTLIER_CELL_CAP):
+        rows = order[chunk]
+        ln = lens[rows]
+        scores, valid = _window_score_rows(w2, w3, off[rows], ln)
+        med = _row_medians(scores, ln)
+        margin = np.abs(scores - med[:, None])
+        mad = _row_medians(np.where(valid, margin, np.inf), ln)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            y = MAD_RATIO * margin / mad[:, None]
+        flags = (y > MAD_THRESHOLD) & (scores < med[:, None]) & valid & (mad != 0)[:, None]
+        for r, f in zip(rows, flags):
+            out[live[r]] = np.flatnonzero(f).tolist()
+    return out
 
 
 def stddev_outlier_indices(scores: np.ndarray, n_sigma: float = 2.0):

@@ -106,33 +106,6 @@ def exact_dedup_keep(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 # ---------------------------------------------------------------------------
 
 
-def _words_col(text_col: str):
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT), lambda x: x != F.lit("")
-    )
-
-
-def with_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Add `shingles`: distinct k-word shingles (space-joined, lowercase).
-
-    Kept for oracle parity / debugging (string shingles). The hot paths use
-    ``with_shingle_hashes``: Spark higher-order functions are interpreted
-    per element (no codegen), so building shingle strings JVM-side costs
-    ~50µs/shingle vs <1µs in an Arrow-batched Python pass.
-    """
-    w = _words_col(text_col)
-    shingles = F.when(
-        F.size(w) >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - k + 1),
-                lambda i: F.concat_ws(" ", F.slice(w, i, k)),
-            )
-        ),
-    ).otherwise(F.array())
-    return df.select(F.col(id_col), shingles.alias("shingles"))
-
-
 def _shingle_pos_mult(k: int) -> np.ndarray:
     """Odd uint64 multipliers decorrelating the k shingle positions.
     shingle_hash(w_j..w_{j+k-1}) = XOR_i (word_hash(w_{j+i}) * P_i):

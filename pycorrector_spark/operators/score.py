@@ -9,6 +9,12 @@ executors). Per north rule, the hot loop (LM probes) is vectorized numpy
 over Arrow batches; only the row-local splice/candidate logic is per-row
 Python inside the already-batched UDF (SURVEY.md §7.3).
 
+This is the production path of the zh detector: each zh document gets one
+per-document map shared by ``zh.detect`` and ``zh.correct``, so every
+(offset, fragment) is detected once and its LM char outliers come from one
+batched pass (refimpl/core.py). ``refimpl.golden.golden_row`` calls the
+same methods without the map — the scalar oracle this stage must match.
+
 Cheap-gate pushdown: rows that already failed the codegen'd heuristics
 (len/symbol/repetition/lang) skip the LM + correction entirely — the
 document is dropped by an earlier rule, so the expensive signals are null
@@ -303,8 +309,11 @@ def process_batch(pdf: pd.DataFrame, zh: Corrector, en: EnSpellCorrector,
     for i in idx_pass:
         t = text.iat[i]
         if lang.iat[i] == "zh":
-            dets = zh.detect(t)
-            res = zh.correct(t)
+            # correct() reuses the fragments detect() saw unchanged (same
+            # text at the same offset); the map lives for this document only
+            shared = {}
+            dets = zh.detect(t, shared)
+            res = zh.correct(t, shared=shared)
         else:
             res = en.correct(t)
             dets = [[w, p, p + len(w), "en_spell"] for (w, c, p) in res["errors"]]

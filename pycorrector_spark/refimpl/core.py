@@ -3,7 +3,7 @@
 A faithful re-expression — NOT a copy — of the statistical core of
 shibing624/pycorrector (the reference at /root/reference):
 
-- Detector._detect / detect: detector.py:396-495
+- Detector._detect_with_proper / detect: detector.py:396-495
 - MAD outlier rule:          detector.py:330-355
 - containment dedup:         detector.py:303-328
 - Corrector.generate_items / get_lm_correct_item / correct:
@@ -50,10 +50,19 @@ choices so they agree with EACH OTHER exactly):
    probability argmax (the reference iterates an unordered set, which is
    hash-seed dependent — we pin determinism).
 
-This module is deliberately row-at-a-time: it defines the labels the
-distributed pipeline must reproduce. The vectorized numpy primitives it
-calls (LM window scorer, MAD) are THE SAME functions the Spark pandas-UDF
-stages call, so oracle and pipeline agree bitwise.
+Two paths run the same detector:
+
+- Oracle: ``detect(text)`` / ``correct(text)`` with no ``shared`` map, as
+  ``refimpl.golden.golden_row`` calls them. Row-at-a-time: each fragment
+  is detected on its own, its LM char outliers from ``window_avg_scores``
+  + ``mad_outlier_indices``. This path defines the labels the distributed
+  pipeline must reproduce.
+- Production: ``operators.score.process_batch`` passes one ``shared`` map
+  per zh document to ``detect`` and then ``correct``. Each (offset,
+  fragment) is detected once per document, and the LM char outliers of
+  the fragments still to detect come from one batched pass
+  (``lm.model.window_outliers_batch``, bit-identical to the scalar
+  composition and differential-tested against it).
 """
 
 from __future__ import annotations
@@ -71,7 +80,7 @@ from ..textops import (
     split_sentences_by_symbol,
     uniform,
 )
-from ..lm.model import CharNgramLM, mad_outlier_indices
+from ..lm.model import CharNgramLM, mad_outlier_indices, window_outliers_batch
 
 
 class ErrorType:
@@ -145,17 +154,16 @@ class Detector:
 
     # -- detection --
 
-    def _detect(self, sentence: str, start_idx: int = 0):
-        """Return [[word, begin, end, type], ...] for one fragment."""
-        return self._detect_with_proper(sentence, start_idx)[0]
-
-    def _detect_with_proper(self, sentence: str, start_idx: int = 0):
+    def _detect_with_proper(self, sentence: str, start_idx: int = 0, char_outliers=None):
         """([[word, begin, end, type], ...], {(word, begin): correction})
         for one fragment.
 
         Stage order and containment dedup mirror detector.py:396-478; the
         proper_details map mirrors the (cur, correct, begin) triples the
         reference corrector consumes (detector.py:419-424).
+        ``char_outliers``: the fragment's LM char outlier indices when the
+        caller computed them already (``lm.model.window_outliers_batch``);
+        None computes them here.
         """
         maybe_errors = []
         proper_details = {}
@@ -195,26 +203,51 @@ class Detector:
 
         # 4. LM char outliers (2/3-gram window average + MAD)
         if self.enable_char_error:
-            sent_scores = self.lm.window_avg_scores(sentence)
-            if sent_scores is not None:
-                for i in mad_outlier_indices(sent_scores):
-                    token = sentence[i]
-                    if is_filter_token(token):
-                        continue
-                    if token in self.stopwords:
-                        continue
-                    _add_maybe_error_item([token, i + start_idx, i + start_idx + 1, ErrorType.char], maybe_errors)
+            if char_outliers is None:
+                sent_scores = self.lm.window_avg_scores(sentence)
+                char_outliers = [] if sent_scores is None else mad_outlier_indices(sent_scores)
+            for i in char_outliers:
+                token = sentence[i]
+                if is_filter_token(token):
+                    continue
+                if token in self.stopwords:
+                    continue
+                _add_maybe_error_item([token, i + start_idx, i + start_idx + 1, ErrorType.char], maybe_errors)
 
         return sorted(maybe_errors, key=lambda k: k[1]), proper_details
 
-    def detect(self, sentence: str):
-        """uniform -> split -> _detect per fragment (detector.py:480-495)."""
+    def _detect_fragments(self, frags, shared=None):
+        """``_detect_with_proper`` of each (fragment, offset) in ``frags``.
+
+        ``shared=None`` is the oracle path: one scalar call per fragment.
+        Otherwise ``shared`` is a per-document map (offset, fragment) ->
+        result: fragments already in it are reused, the rest are detected
+        with their LM char outliers computed in one batched pass and added
+        to it. A result depends only on the fragment and its offset, so
+        the reuse is exact.
+        """
+        if shared is None:
+            return [self._detect_with_proper(sent, idx) for sent, idx in frags]
+        todo = [(sent, idx) for sent, idx in frags if (idx, sent) not in shared]
+        if todo:
+            outliers = (
+                window_outliers_batch(self.lm, [sent for sent, _ in todo])
+                if self.enable_char_error else [None] * len(todo)
+            )
+            for (sent, idx), found in zip(todo, outliers):
+                shared[(idx, sent)] = self._detect_with_proper(sent, idx, found)
+        return [shared[(idx, sent)] for sent, idx in frags]
+
+    def detect(self, sentence: str, shared: dict = None):
+        """uniform -> split -> detect per fragment (detector.py:480-495).
+        ``shared``: see ``_detect_fragments``; the pipeline passes one map
+        per document to both ``detect`` and ``correct``."""
         maybe_errors = []
         if not sentence.strip():
             return maybe_errors
         sentence = uniform(sentence)
-        for sent, idx in split_sentences_by_symbol(sentence):
-            maybe_errors += self._detect(sent, idx)
+        for errs, _ in self._detect_fragments(split_sentences_by_symbol(sentence), shared):
+            maybe_errors += errs
         return maybe_errors
 
 
@@ -380,15 +413,19 @@ class Corrector(Detector):
             result = top_items[0]
         return result
 
-    def correct(self, sentence: str, include_symbol: bool = True, num_fragment: int = 1, threshold: float = None):
+    def correct(self, sentence: str, include_symbol: bool = True, num_fragment: int = 1,
+                threshold: float = None, shared: dict = None):
+        """Full correction; NOTE: no uniform() here (reference asymmetry,
+        corrector.py:285 vs detector.py:490). ``shared``: the map a
+        ``detect(sentence, shared)`` call filled (``_detect_fragments``)."""
         if threshold is None:
             threshold = self.PPL_THRESHOLD
-        """Full correction; NOTE: no uniform() here (reference asymmetry,
-        corrector.py:285 vs detector.py:490)."""
         corrected_sentence = ""
         details = []
-        for sent, idx in split_sentences_by_symbol(sentence, include_symbol=include_symbol):
-            maybe_errors, proper_details = self._detect_with_proper(sent, idx)
+        frags = split_sentences_by_symbol(sentence, include_symbol=include_symbol)
+        for (sent, idx), (maybe_errors, proper_details) in zip(
+            frags, self._detect_fragments(frags, shared)
+        ):
             for cur_item, begin_idx, end_idx, err_type in maybe_errors:
                 before_sent = sent[: (begin_idx - idx)]
                 after_sent = sent[(end_idx - idx):]

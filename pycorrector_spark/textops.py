@@ -503,16 +503,6 @@ def segment_pos(sentence: str, word_freq: dict, total: int = None,
     ]
 
 
-def char_ngrams(s: str, n: int):
-    """All contiguous char n-grams of s (len(s)-n+1 of them)."""
-    return [s[i: i + n] for i in range(len(s) - n + 1)]
-
-
-def word_shingles(tokens, k: int):
-    """k-word shingles joined by a single space."""
-    return [" ".join(tokens[i: i + k]) for i in range(len(tokens) - k + 1)]
-
-
 # --------------------------------------------------------------------------
 # Multi-pattern scanning (replaces pyahocorasick for small confusion sets).
 # --------------------------------------------------------------------------
@@ -848,12 +838,6 @@ def t2s_full_rewriter() -> LongestMatchRewriter:
 def t2s_full(text: str) -> str:
     """Traditional -> simplified with phrase awareness (full tables)."""
     return t2s_full_rewriter()(text)
-
-
-def t2s_full_series(s: pd.Series) -> pd.Series:
-    """Vectorized full single-char t2s (phrase-free translate path — the
-    oracle-mirrorable projection; use t2s_full for phrase rewrites)."""
-    return s.fillna("").str.translate(t2s_full_chars()[1])
 
 
 @functools.lru_cache(maxsize=None)

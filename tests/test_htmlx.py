@@ -191,3 +191,24 @@ def test_url_dedup_latest_keeps_newest_crawl(spark):
     ).withColumn("warc_ts", F.to_timestamp(F.lit("2026-01-01 00:00:00")))
     (w,) = url_dedup_latest(tied).collect()
     assert w.doc_id == 2 and w.n_crawls == 2
+
+
+def test_url_dedup_latest_null_ts(spark):
+    """A url whose crawls all have NULL warc_ts still yields one row (max
+    id, NULL ts); in a mixed url a NULL crawl loses to any dated one."""
+    from pyspark.sql import functions as F
+
+    from pycorrector_spark.operators.htmlx import url_dedup_latest
+
+    crawls = spark.createDataFrame(
+        [(1, "https://a/x", None), (2, "https://a/x", None),
+         (3, "https://b/y", None), (4, "https://b/y", "2026-01-01 00:00:00"),
+         (5, "https://b/y", None)],
+        "doc_id long, url string, warc_ts string",
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    rows = {r.norm_url: r for r in url_dedup_latest(crawls).collect()}
+    assert len(rows) == 2
+    a = next(r for u, r in rows.items() if "//a/" in u)
+    b = next(r for u, r in rows.items() if "//b/" in u)
+    assert (a.doc_id, a.warc_ts, a.n_crawls) == (2, None, 2)
+    assert (b.doc_id, b.n_crawls) == (4, 3) and b.warc_ts is not None
