@@ -625,56 +625,14 @@ def q_ccnet_buckets(spark, sf_dir):
     return out
 
 
-def q_lm_ppl_binary(spark, sf_dir):
-    """Perplexity through the BINARY model path (S10): the trained LM is
-    serialized to the SGKLM container, re-loaded as the KenLM-probing-
-    style hash-table scorer (chained MurmurHash64A keys, open-addressing
-    probes — lm/binary.py), broadcast, and scored over the same pool as
-    qf_lm_ppl. The oracle is qf_lm_ppl's frexp-literal table: binary
-    round-trip + hash probing must reproduce the sorted-array scores
-    bit-for-bit, which this hash check proves end-to-end."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-
-    def build():
-        import os
-        import tempfile
-
-        from pycorrector_spark.lm.binary import load_binary, save_binary
-
-        fd, path = tempfile.mkstemp(suffix=".sgklm")
-        os.close(fd)
-        try:
-            save_binary(_full_artifacts_cached().lm, path)
-            return load_binary(path)  # plain arrays -> picklable broadcast
-        finally:
-            os.unlink(path)
-
-    bc = _cached_bc(spark, "lm_binary", build)
-
-    def fn(it):
-        from pycorrector_spark.textops import uniform
-
-        lm = bc.value
-        for pdf in it:
-            ppl = lm.ppl_batch([uniform(t) for t in pdf["text"].fillna("")])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ppl": ppl})
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, PPL_POOL)).mapInPandas(
-        fn, "doc_id long, ppl double"
-    )
-
-
 @functools.lru_cache(maxsize=None)
 def _klm_model_cached():
     """Genuine-KenLM-format round trip of the trained LM, built once:
     write a real-layout PROBING binary (write_kenlm_probing — the
     build_binary workalike) and decode its payload back through
     load_kenlm_probing. float32 on disk, so this model is explicitly
-    bit_exact=False vs the float64 ARPA model — but DETERMINISTIC: the
-    Spark stage and the serial oracle score with the identical upcast
-    arrays, so their floats are bitwise equal to each other."""
+    bit_exact=False vs the float64 ARPA model; it must score exactly like
+    the float32-rounded id-keyed model the oracle uses."""
     import os
     import tempfile
 
@@ -698,8 +656,9 @@ def q_lm_ppl_klm(spark, sf_dir):
     ``.klm`` (float32 payload, CombineWordHash keys — reference
     detector.py:106-117 loads exactly this format) and scores the same
     pool as qf_lm_ppl. Oracle = frexp literals from the serial scorer on
-    the same decoded model, so the driver hash check proves the binary
-    decode + distributed scoring end-to-end."""
+    the id-keyed LM with float32-rounded values, so the gate's hash check
+    proves that the binary decode and hash-keyed probes reproduce the
+    id-keyed scores bit for bit, end to end."""
     import pandas as pd
     from pycorrector_spark.fixtures import PPL_POOL
     from pycorrector_spark.operators.dedup import ensure_parallelism
@@ -2439,7 +2398,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nb_langid": q_nb_langid,
         "dsir_select": q_dsir_select,
         "qf_lm_ppl": q_lm_ppl,
-        "qf_lm_ppl_binary": q_lm_ppl_binary,
         "qf_ccnet_buckets": q_ccnet_buckets,
         "qf_gopher_rules": q_gopher_rules,
         "qf_top_ngram": q_top_ngram,
@@ -2647,13 +2605,16 @@ def _qf_lm_ppl_oracle_sql() -> str:
 
 @functools.lru_cache(maxsize=None)
 def _qf_lm_ppl_klm_oracle_sql() -> str:
-    """Serial scoring through the SAME decoded genuine-KenLM model the
-    Spark stage broadcasts — frexp literals, bitwise-equal by shared
-    arrays (see _klm_model_cached)."""
+    """Serial scoring through the id-keyed trained LM with its values
+    rounded through float32 (model.float32_rounded) — never through the
+    decoded .klm, so the gate checks the binary decode and its
+    CombineWordHash keys against code that does not touch lm/binary.
+    Frexp literals; the decoded model must match them bit for bit."""
     from pycorrector_spark.fixtures import PPL_POOL
+    from pycorrector_spark.lm.model import float32_rounded
     from pycorrector_spark.textops import uniform
 
-    lm = _klm_model_cached()
+    lm = float32_rounded(_full_artifacts_cached().lm)
     ppl = lm.ppl_batch([uniform(s) for s in PPL_POOL])
     rows = [(i, (float(p),)) for i, p in enumerate(ppl)]
     return _pool_oracle_sql(len(PPL_POOL), ["ppl"], rows)
@@ -3933,7 +3894,6 @@ def oracle_sql() -> dict[str, str]:
         "zh_correct_full": _zh_correct_full_oracle_sql(),
         "en_spell_full": _en_spell_full_oracle_sql(),
         "qf_lm_ppl": _qf_lm_ppl_oracle_sql(),
-        "qf_lm_ppl_binary": _qf_lm_ppl_oracle_sql(),
         "qf_lm_ppl_klm": _qf_lm_ppl_klm_oracle_sql(),
         "qf_ccnet_buckets": _qf_ccnet_oracle_sql(),
         "qf_pipeline_pool": _pipeline_pool_oracle_sql(),

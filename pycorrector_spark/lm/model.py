@@ -86,28 +86,6 @@ class CharNgramLM:
         for ch, i in vocab.items():
             self._cp_map[ord(ch)] = i
 
-    # ---- backward-compatible views (order <= 3 ARPA tests, window math) ----
-
-    @property
-    def keys2(self):
-        return self.keys.get(2, np.empty(0, dtype=np.int64))
-
-    @property
-    def p2(self):
-        return self.p.get(2, np.empty(0, dtype=np.float64))
-
-    @property
-    def bow2(self):
-        return self.ctx_bow.get(2, np.zeros(len(self.keys2), dtype=np.float64))
-
-    @property
-    def keys3(self):
-        return self.keys.get(3, np.empty(0, dtype=np.int64))
-
-    @property
-    def p3(self):
-        return self.p.get(3, np.empty(0, dtype=np.float64))
-
     # ---------------- encoding ----------------
 
     def encode(self, text: str) -> np.ndarray:
@@ -163,23 +141,25 @@ class CharNgramLM:
             pn[miss] = bow + self.cond(mc[1:], w[miss])
         return pn
 
-    # -- probe hooks (overridden by the hash-probing binary model,
-    #    lm/binary.ProbingCharLM — same recursion, different key scheme) --
+    # -- probe hooks: every n-gram probe keys its id columns through
+    #    ``_key`` (packed ids here; KenLM's hash in lm/binary.KenLMProbingLM,
+    #    whose ``keys[n]`` are sorted hash keys) --
+
+    def _key(self, cols) -> np.ndarray:
+        """Sorted-table key of the n-grams formed by ``cols``."""
+        return _pack_cols(cols, self.base)
 
     def _probe_ngram(self, n: int, cols) -> np.ndarray:
         """log10 prob of the n-grams formed by ``cols`` (n id arrays,
         oldest first); NaN where the gram is not stored."""
         if n not in self.keys:
             return np.full(len(cols[-1]), np.nan)
-        q = _pack_cols(cols, self.base)
-        return self._probe(self.keys[n], self.p[n], q, np.nan)
+        return self._probe(self.keys[n], self.p[n], self._key(cols), np.nan)
 
     def _probe_bow(self, m: int, cols) -> np.ndarray:
         """log10 backoff weight of the length-m contexts (0 when absent)."""
         if m in self.keys and m in self.ctx_bow:
-            return self._probe(
-                self.keys[m], self.ctx_bow[m], _pack_cols(cols, self.base), 0.0
-            )
+            return self._probe(self.keys[m], self.ctx_bow[m], self._key(cols), 0.0)
         return np.zeros(len(cols[-1]), dtype=np.float64)
 
     def cond2(self, v: np.ndarray, w: np.ndarray) -> np.ndarray:
@@ -437,21 +417,6 @@ def window_outliers_batch(lm: CharNgramLM, sentences):
     return out
 
 
-def stddev_outlier_indices(scores: np.ndarray, n_sigma: float = 2.0):
-    """Mean +- n*sigma outlier rule — reference detector.py:357-372 (the
-    unused alternative to the MAD test; kept for config parity). Matches
-    the reference exactly: sample std (ddof=1) and BOTH tails flagged."""
-    scores = np.asarray(scores, dtype=np.float64)
-    if len(scores) < 2:
-        return []
-    std = scores.std(ddof=1)
-    if std == 0:
-        return []
-    mean = scores.mean()
-    lo, hi = mean - n_sigma * std, mean + n_sigma * std
-    return [int(i) for i in np.where((scores < lo) | (scores > hi))[0]]
-
-
 def _id_to_token(lm: CharNgramLM):
     rev = {}
     for c, i in lm.vocab.items():
@@ -473,12 +438,41 @@ def _id_to_token(lm: CharNgramLM):
     return rev
 
 
-def _unpack(key: int, n: int, base: int):
-    ids = []
-    for _ in range(n):
-        key, r = divmod(int(key), base)
-        ids.append(r)
-    return list(reversed(ids))
+def _unpack_cols(keys, n: int, base: int):
+    """Inverse of ``_pack_cols``: n id columns, oldest first."""
+    cols, rem = [], np.asarray(keys, dtype=np.int64)
+    for j in range(n - 1, -1, -1):
+        div = base ** j
+        cols.append(rem // div)
+        rem = rem % div
+    return cols
+
+
+def require_id_keys(lm: CharNgramLM) -> None:
+    """Raise ValueError unless ``lm``'s n-gram keys are packed ids that
+    ``_unpack_cols`` decodes. A model decoded from a KenLM binary keys its
+    tables by hash; exporting it would decode those hashes as ids."""
+    if type(lm)._key is not CharNgramLM._key:
+        raise ValueError(
+            f"{type(lm).__name__} keys its n-grams by hash, which cannot be "
+            "decoded back to ids; export the id-keyed model it was built from"
+        )
+
+
+def float32_rounded(lm: CharNgramLM) -> CharNgramLM:
+    """``lm`` with every probability and backoff weight rounded through
+    float32, as a KenLM binary stores them; keys stay packed ids."""
+    require_id_keys(lm)
+
+    def f32(a):
+        return a.astype(np.float32).astype(np.float64)
+
+    return CharNgramLM(
+        lm.vocab, f32(lm.p1), f32(lm.bow1), lm.keys,
+        {n: f32(v) for n, v in lm.p.items()},
+        {n: f32(v) for n, v in lm.ctx_bow.items()},
+        lm.order,
+    )
 
 
 def to_arpa_lines(lm: CharNgramLM):
@@ -488,7 +482,9 @@ def to_arpa_lines(lm: CharNgramLM):
     inspected or shipped. Probabilities are emitted at full float64
     precision (repr — shortest string that round-trips the exact IEEE-754
     value), so load_arpa(to_arpa_lines(lm)) reproduces BIT-IDENTICAL
-    scores (test-enforced). Emits every order up to lm.order."""
+    scores (test-enforced). Emits every order up to lm.order. Raises
+    ValueError on a hash-keyed model (``require_id_keys``)."""
+    require_id_keys(lm)
     rev = _id_to_token(lm)
     base = lm.base
     uni_ids = [0, 1, 2] + sorted(lm.vocab.values())
@@ -506,8 +502,9 @@ def to_arpa_lines(lm: CharNgramLM):
         lines.append("")
         lines.append(f"\\{n}-grams:")
         bows = lm.ctx_bow.get(n)
-        for j, (k, p) in enumerate(zip(lm.keys.get(n, ()), lm.p.get(n, ()))):
-            gram = " ".join(rev[i] for i in _unpack(k, n, base))
+        grams = zip(*(c.tolist() for c in _unpack_cols(lm.keys.get(n, ()), n, base)))
+        for j, (ids, p) in enumerate(zip(grams, lm.p.get(n, ()))):
+            gram = " ".join(rev[i] for i in ids)
             bow = float(bows[j]) if bows is not None else 0.0
             if bow != 0.0:
                 lines.append(f"{float(p)!r}\t{gram}\t{bow!r}")

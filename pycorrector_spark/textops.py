@@ -79,17 +79,9 @@ def is_cjk_string(s: str) -> bool:
     return bool(s) and _CJK_FULL_RE.match(s) is not None
 
 
-def is_alpha_char(ch: str) -> bool:
-    return ("a" <= ch <= "z") or ("A" <= ch <= "Z")
-
-
 def is_alpha_string(s: str) -> bool:
     # ascii+alpha == [A-Za-z]+ exactly, at C speed (vs per-char Python)
     return bool(s) and s.isascii() and s.isalpha()
-
-
-def is_digit_string(s: str) -> bool:
-    return s.isdigit()
 
 
 def is_filter_token(token: str) -> bool:
@@ -871,11 +863,6 @@ def s2t_full_rewriter() -> "LongestMatchRewriter":
 def s2t_full(text: str) -> str:
     """Simplified -> traditional with phrase awareness (full tables)."""
     return s2t_full_rewriter()(text)
-
-
-def s2t_full_series(s: pd.Series) -> pd.Series:
-    """Vectorized full single-char s2t (phrase-free translate path)."""
-    return s.fillna("").str.translate(s2t_full_chars()[1])
 
 
 def word_ngrams(tokens, mode: str = "12"):

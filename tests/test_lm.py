@@ -18,8 +18,8 @@ def test_training_deterministic():
     a = train_char_lm(lm_corpus())
     b = train_char_lm(lm_corpus())
     assert a.vocab == b.vocab
-    np.testing.assert_array_equal(a.keys3, b.keys3)
-    np.testing.assert_array_equal(a.p3, b.p3)
+    np.testing.assert_array_equal(a.keys[3], b.keys[3])
+    np.testing.assert_array_equal(a.p[3], b.p[3])
 
 
 def test_score_is_sum_of_log10_probs(lm):
@@ -99,19 +99,6 @@ def test_mad_outlier_rule():
     assert mad_outlier_indices(scores_hi) == []
     # zero MAD -> no flags
     assert mad_outlier_indices(np.array([1.0, 1.0, 1.0])) == []
-
-
-def test_stddev_outlier_indices():
-    from pycorrector_spark.lm.model import stddev_outlier_indices
-    import numpy as np
-
-    scores = np.array([-1.0, -1.1, -0.9, -1.0] * 3 + [-8.0])
-    assert stddev_outlier_indices(scores) == [12]
-    assert stddev_outlier_indices(np.array([])) == []
-    assert stddev_outlier_indices(np.array([5.0])) == []
-    assert stddev_outlier_indices(np.array([2.0, 2.0, 2.0])) == []
-    # reference semantics: BOTH tails flagged (detector.py:357-372)
-    assert stddev_outlier_indices(np.array([-1.0, -1.1, -0.9, -1.0] * 3 + [6.0])) == [12]
 
 
 def test_train_char_lm_rejects_min_count():

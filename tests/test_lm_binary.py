@@ -1,7 +1,10 @@
-"""Binary LM container + KenLM-probing-style hash scorer (S10 closure).
+"""KenLM PROBING binaries: header diagnostics, the payload decoder and
+the exporters' refusal of hash-keyed models.
 
-Contract (round-2 verdict item 2): a unit test loading a binary model and
-matching load_arpa scores bit-for-bit."""
+Contract: a model decoded from a ``.klm`` keys its sorted tables by
+KenLM's CombineWordHash and must score exactly like the id-keyed model
+with its values rounded through float32 (``model.float32_rounded``), bit
+for bit, on every scoring entry point."""
 
 import struct
 
@@ -9,16 +12,22 @@ import numpy as np
 import pytest
 
 from pycorrector_spark.fixtures import PPL_POOL, lm_corpus
+from pycorrector_spark.lm import binary
 from pycorrector_spark.lm.binary import (
     KENLM_MAGIC,
-    ProbingCharLM,
-    gram_hash,
-    load_binary,
-    load_klm,
+    KenLMProbingLM,
+    load_kenlm_probing,
     read_kenlm_header,
-    save_binary,
+    write_kenlm_probing,
 )
-from pycorrector_spark.lm.model import load_arpa, to_arpa_lines, train_char_lm
+from pycorrector_spark.lm.model import (
+    float32_rounded,
+    load_arpa,
+    to_arpa_lines,
+    train_char_lm,
+    window_outliers_batch,
+)
+from pycorrector_spark.textops import uniform
 
 
 @pytest.fixture(scope="module")
@@ -27,10 +36,20 @@ def lm():
 
 
 @pytest.fixture(scope="module")
-def bin_path(lm, tmp_path_factory):
-    p = tmp_path_factory.mktemp("lm") / "model.sgklm"
-    save_binary(lm, str(p))
+def klm_path(lm, tmp_path_factory):
+    p = tmp_path_factory.mktemp("klm") / "model.klm"
+    write_kenlm_probing(lm, str(p))
     return str(p)
+
+
+@pytest.fixture(scope="module")
+def klm(klm_path):
+    return load_kenlm_probing(klm_path)
+
+
+@pytest.fixture(scope="module")
+def q32(lm):
+    return float32_rounded(lm)
 
 
 TEXTS = [t for t in PPL_POOL if t.strip()][:24]
@@ -40,62 +59,97 @@ def _scores(model):
     return model.ppl_batch(TEXTS)
 
 
-def test_roundtrip_bitwise(lm, bin_path):
-    loaded = load_binary(bin_path)
-    assert isinstance(loaded, ProbingCharLM)
-    assert loaded.order == lm.order
-    assert loaded.vocab == lm.vocab
-    a = _scores(lm)
-    b = _scores(loaded)
-    assert a.tolist() == b.tolist()  # bit-for-bit float64
+# the gate pool as the pipeline scores it, plus empty, 1-char and
+# OOV-only texts
+DIFF_TEXTS = [uniform(t) for t in PPL_POOL] + ["", "的", "ΩΨ漢拏"]
 
 
-def test_arpa_binary_arpa_chain_bitwise(lm, bin_path, tmp_path):
-    # ARPA -> model -> binary -> model: every hop preserves exact scores
-    via_arpa = load_arpa(to_arpa_lines(lm))
-    p = tmp_path / "via_arpa.sgklm"
-    save_binary(via_arpa, str(p))
-    via_both = load_binary(str(p))
-    assert _scores(via_arpa).tolist() == _scores(lm).tolist()
-    assert _scores(via_both).tolist() == _scores(lm).tolist()
+def _bits(values):
+    """IEEE-754 bit patterns: equal only if bit for bit (NaN, -0.0 too)."""
+    return np.asarray(values, dtype=np.float64).view(np.uint64).tolist()
 
 
-def test_mmap_load_matches(lm, bin_path):
-    mapped = load_binary(bin_path, mmap=True)
-    assert any(isinstance(t[0], np.memmap) for t in mapped.tables.values())
-    assert _scores(mapped).tolist() == _scores(lm).tolist()
+def test_roundtrip_bitwise(lm, klm, q32):
+    assert isinstance(klm, KenLMProbingLM) and klm.bit_exact is False
+    assert klm.vocab == lm.vocab and klm.order == lm.order
+    got = _bits(klm.ppl_batch(DIFF_TEXTS))
+    assert got == _bits(q32.ppl_batch(DIFF_TEXTS))
+    # float32 rounding moves the scores, so the equality above is not vacuous
+    assert got != _bits(lm.ppl_batch(DIFF_TEXTS))
 
 
-def test_probing_and_sorted_probe_hooks_agree(lm, bin_path):
-    # window scorer (detector hot path) exercises cond2/cond3 backoff
-    loaded = load_binary(bin_path)
-    for s in ["少先队员应该为老人让座", "天下大乱形势大好", "abc一二三"]:
-        a = lm.window_avg_scores(s)
-        b = loaded.window_avg_scores(s)
+def test_oov_and_unseen_grams_backoff(lm, klm, q32):
+    # OOV chars map to <unk> in both models; unseen grams back off alike
+    assert np.all(klm.encode("ΩΨ漢拏") == 0)
+    got = [klm.score_chars(t, bos=True, eos=True) for t in DIFF_TEXTS]
+    assert _bits(got) == _bits([q32.score_chars(t, bos=True, eos=True) for t in DIFF_TEXTS])
+    assert _bits(got) != _bits([lm.score_chars(t, bos=True, eos=True) for t in DIFF_TEXTS])
+
+
+def test_probing_and_sorted_probe_hooks_agree(lm, klm, q32):
+    # the detector's window scorer exercises cond2/cond3 backoff
+    moved = False
+    for t in DIFF_TEXTS:
+        a, b = klm.window_avg_scores(t), q32.window_avg_scores(t)
         assert (a is None) == (b is None)
         if a is not None:
-            assert a.tolist() == b.tolist()
+            assert _bits(a) == _bits(b)
+            moved |= _bits(a) != _bits(lm.window_avg_scores(t))
+    assert moved
+    assert window_outliers_batch(klm, DIFF_TEXTS) == window_outliers_batch(q32, DIFF_TEXTS)
 
 
-def test_oov_and_unseen_grams_backoff(lm, bin_path):
-    loaded = load_binary(bin_path)
-    # chars absent from the vocab map to unk in BOTH models
-    assert loaded.score_chars("ΩΨ漢拏") == lm.score_chars("ΩΨ漢拏")
-
-
-def test_gram_hash_order_disjoint():
-    a = np.array([5, 7], dtype=np.int64)
-    # same ids as a 1-extension vs packed differently must not collide
-    h2 = gram_hash([a[:1], a[1:]])
-    h1 = gram_hash([a[:1]])
-    assert h2[0] != h1[0]
+def test_arpa_binary_arpa_chain_bitwise(lm, q32, tmp_path):
+    # ARPA -> model -> .klm -> model: the ARPA hop is exact, the binary
+    # hop is exactly the float32 rounding
+    via_arpa = load_arpa(to_arpa_lines(lm))
+    p = tmp_path / "via_arpa.klm"
+    write_kenlm_probing(via_arpa, str(p))
+    got = _bits(load_kenlm_probing(str(p)).ppl_batch(DIFF_TEXTS))
+    assert got == _bits(q32.ppl_batch(DIFF_TEXTS))
 
 
 def test_save_rejects_nothing_loads_garbage(tmp_path):
     p = tmp_path / "garbage.bin"
     p.write_bytes(b"not a model at all, definitely")
     with pytest.raises(ValueError):
-        load_binary(str(p))
+        load_kenlm_probing(str(p))
+
+
+def test_kenlm_duplicate_key_raises(lm, klm_path, tmp_path):
+    """A .klm whose 2-gram table holds one key in two slots is malformed:
+    the loader must refuse it, not keep either entry silently."""
+    info = read_kenlm_header(klm_path)
+    counts, mult = info["counts"], info["probing_multiplier"]
+    off = (
+        info["data_offset"] + 8
+        + binary._VOCAB_ENTRY.itemsize * binary._probing_buckets(counts[0], mult)
+        + binary._UNI_ENTRY.itemsize * (counts[0] + 2)
+    )
+    buckets = binary._probing_buckets(counts[1], mult)
+    raw = bytearray(open(klm_path, "rb").read())
+    size = binary._MID_ENTRY.itemsize * buckets
+    table = np.frombuffer(bytes(raw[off:off + size]), dtype=binary._MID_ENTRY).copy()
+    full, empty = np.flatnonzero(table["key"] != 0), np.flatnonzero(table["key"] == 0)
+    assert len(full) == counts[1] and len(empty)
+    table[empty[0]] = table[full[0]]
+    raw[off:off + size] = table.tobytes()
+    p = tmp_path / "dup.klm"
+    p.write_bytes(bytes(raw))
+    with pytest.raises(ValueError, match="duplicate"):
+        load_kenlm_probing(str(p))
+
+
+def test_to_arpa_lines_refuses_hash_keyed(klm):
+    with pytest.raises(ValueError, match="hash"):
+        to_arpa_lines(klm)
+
+
+def test_write_kenlm_probing_refuses_hash_keyed(klm, tmp_path):
+    p = tmp_path / "again.klm"
+    with pytest.raises(ValueError, match="hash"):
+        write_kenlm_probing(klm, str(p))
+    assert not p.exists()
 
 
 def _write_fake_header(p, model_type: int):
@@ -132,12 +186,12 @@ def test_kenlm_header_parse_and_payload_boundary(tmp_path):
 
     # header-only file: payload decode must fail loudly, not return junk
     with pytest.raises((ValueError, struct.error)):
-        load_klm(str(p))
+        load_kenlm_probing(str(p))
 
     t = tmp_path / "trie.klm"
     _write_fake_header(t, model_type=2)  # TRIE
     with pytest.raises(NotImplementedError) as ei:
-        load_klm(str(t))
+        load_kenlm_probing(str(t))
     assert "TRIE" in str(ei.value)
 
     q = tmp_path / "not_klm.bin"
@@ -146,28 +200,12 @@ def test_kenlm_header_parse_and_payload_boundary(tmp_path):
         read_kenlm_header(str(q))
 
 
-# ---------------------------------------------------------------------------
-# genuine-KenLM PROBING payload round-trip (round-4 verdict ask #5)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def klm_path(lm, tmp_path_factory):
-    from pycorrector_spark.lm.binary import write_kenlm_probing
-
-    p = tmp_path_factory.mktemp("klm") / "model.klm"
-    write_kenlm_probing(lm, str(p))
-    return str(p)
-
-
 def test_kenlm_probing_payload_roundtrip_scores(lm, klm_path):
     """A real-layout PROBING binary (written by this module's
     build_binary workalike from the fixture LM) loads through the genuine
     payload decoder and reproduces the float64 model's scores to float32
     tolerance — the disclosed bit_exact=False contract."""
-    from pycorrector_spark.lm.binary import KenLMProbingLM
-
-    m = load_klm(klm_path)
+    m = load_kenlm_probing(klm_path)
     assert isinstance(m, KenLMProbingLM) and m.bit_exact is False
     assert m.order == lm.order
     assert int(m.bos_id) == 1 and int(m.eos_id) == 2
@@ -194,7 +232,7 @@ def test_kenlm_probing_header_fields(lm, klm_path):
 def test_kenlm_probing_oov_and_unk(lm, klm_path):
     """OOV chars miss the vocab probing table and fall to <unk> id 0 —
     same path a genuine kenlm query takes."""
-    m = load_klm(klm_path)
+    m = load_kenlm_probing(klm_path)
     oov = "\N{SNOWMAN}"
     assert np.all(m.encode(oov) == 0)
     assert np.isfinite(m.perplexity_chars(oov + "的"))
@@ -204,14 +242,6 @@ def test_kenlm_insane_header_refuses_to_load(lm, tmp_path):
     """A .klm whose Sanity reference values fail (ABI-incompatible
     producer) must raise instead of decoding the payload into silent
     garbage perplexities."""
-    import struct
-
-    from pycorrector_spark.lm.binary import (
-        load_kenlm_probing,
-        read_kenlm_header,
-        write_kenlm_probing,
-    )
-
     p = tmp_path / "insane.klm"
     write_kenlm_probing(lm, str(p))
     raw = bytearray(p.read_bytes())
