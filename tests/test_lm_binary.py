@@ -21,6 +21,7 @@ from pycorrector_spark.lm.binary import (
     write_kenlm_probing,
 )
 from pycorrector_spark.lm.model import (
+    _unpack_cols,
     float32_rounded,
     load_arpa,
     to_arpa_lines,
@@ -69,8 +70,14 @@ def _bits(values):
     return np.asarray(values, dtype=np.float64).view(np.uint64).tolist()
 
 
-def test_roundtrip_bitwise(lm, klm, q32):
+def test_roundtrip_bitwise(lm, klm, q32, klm_path, tmp_path):
+    """id-keyed model -> .klm -> hash-keyed model scores exactly like the
+    float32-rounded id-keyed model, and that rounded model is a fixed
+    point of the trip: writing it gives the same file bytes."""
     assert isinstance(klm, KenLMProbingLM) and klm.bit_exact is False
+    p = tmp_path / "q32.klm"
+    write_kenlm_probing(q32, str(p))
+    assert p.read_bytes() == open(klm_path, "rb").read()
     assert klm.vocab == lm.vocab and klm.order == lm.order
     got = _bits(klm.ppl_batch(DIFF_TEXTS))
     assert got == _bits(q32.ppl_batch(DIFF_TEXTS))
@@ -87,7 +94,10 @@ def test_oov_and_unseen_grams_backoff(lm, klm, q32):
 
 
 def test_probing_and_sorted_probe_hooks_agree(lm, klm, q32):
-    # the detector's window scorer exercises cond2/cond3 backoff
+    """The PROBING-decoded model (``_key`` = KenLM hash) and the id-keyed
+    model (``_key`` = packed ids) run the same sorted probe; only the key
+    hook differs. The detector's window scorers, which exercise cond2/cond3
+    backoff, must agree bit for bit."""
     moved = False
     for t in DIFF_TEXTS:
         a, b = klm.window_avg_scores(t), q32.window_avg_scores(t)
@@ -102,11 +112,41 @@ def test_probing_and_sorted_probe_hooks_agree(lm, klm, q32):
 def test_arpa_binary_arpa_chain_bitwise(lm, q32, tmp_path):
     # ARPA -> model -> .klm -> model: the ARPA hop is exact, the binary
     # hop is exactly the float32 rounding
-    via_arpa = load_arpa(to_arpa_lines(lm))
+    lines = to_arpa_lines(lm)
+    via_arpa = load_arpa(lines)
+    assert _bits(via_arpa.ppl_batch(DIFF_TEXTS)) == _bits(lm.ppl_batch(DIFF_TEXTS))
+    assert _bits(via_arpa.ppl_batch(TEXTS)) == _bits(lm.ppl_batch(TEXTS))
+    # the rebuilt model exports the very same lines
+    assert to_arpa_lines(via_arpa) == lines
     p = tmp_path / "via_arpa.klm"
     write_kenlm_probing(via_arpa, str(p))
     got = _bits(load_kenlm_probing(str(p)).ppl_batch(DIFF_TEXTS))
     assert got == _bits(q32.ppl_batch(DIFF_TEXTS))
+
+
+def _unpack_scalar(key: int, n: int, base: int):
+    """Per-key reference decoder: n ids, oldest first, by Python-int divmod."""
+    ids = []
+    for _ in range(n):
+        key, r = divmod(int(key), base)
+        ids.append(r)
+    return ids[::-1]
+
+
+def test_unpack_cols_matches_scalar_decoder(lm):
+    # every stored key of every order decodes to the same ids as the
+    # per-key divmod reference, so to_arpa_lines and write_kenlm_probing
+    # see the grams the model was trained with
+    for n in range(2, lm.order + 1):
+        keys = lm.keys[n]
+        cols = _unpack_cols(keys, n, lm.base)
+        got = [list(ids) for ids in zip(*(c.tolist() for c in cols))]
+        assert got == [_unpack_scalar(k, n, lm.base) for k in keys.tolist()]
+    huge = np.array([lm.base ** 5 - 1, 0, lm.base ** 4], dtype=np.int64)
+    cols = _unpack_cols(huge, 5, lm.base)
+    assert [list(ids) for ids in zip(*(c.tolist() for c in cols))] == [
+        _unpack_scalar(k, 5, lm.base) for k in huge.tolist()
+    ]
 
 
 def test_save_rejects_nothing_loads_garbage(tmp_path):
